@@ -292,15 +292,15 @@ def knn_ivf(vectors: DataFrame, query: DataFrame, *, k: int = 10,
     cent_rows = unit_rows(centroids)
 
     # r14: the query side is a BOUNDED probe set by contract (a
-    # serving-layer lookup, not a corpus) — collect it once and rank
-    # its top-nprobe cells on the driver, so the single-query case
-    # fuses the probe filter INTO the full-corpus assignment pass
-    # (guide §4.2): rows outside the probed cells never cross the
+    # serving-layer lookup, not a corpus); two rows are enough to spot
+    # the single-query case. Rank its top-nprobe cells on the driver,
+    # so that case fuses the probe filter INTO the full-corpus
+    # assignment pass (guide §4.2): rows outside the probed cells never cross the
     # Arrow boundary back, and the BroadcastExchange + probe-join
     # stage disappears from the plan. The driver dot replicates the
     # JVM fold exactly (same sequential acc + x*y double adds), and
     # the (−sim, cell) tuple sort is the array_sort struct order.
-    qrows = query.select("q").collect()
+    qrows = query.select("q").limit(2).collect()
     if len(qrows) == 1:
         qv = [float(x) for x in qrows[0]["q"]]
 

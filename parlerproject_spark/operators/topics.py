@@ -77,12 +77,13 @@ def _assign(vectors: DataFrame, centroids: list[list[float]], *,
     back). Zero-norm vectors are always outliers under a threshold
     (cosine undefined).
 
-    `keep_topics`: when set (arrow impl), rows whose argmax topic is
-    NOT in the list are dropped INSIDE the Python pass — the IVF
-    probe filter fused into the assignment map (guide §4: pass only
-    the rows the consumer needs back across the Arrow boundary;
-    ~(1 - nprobe/num_cells) of the corpus never re-crosses it).
-    Identical to filtering the returned `topic` column afterwards."""
+    `keep_topics`: when set, rows whose argmax topic is NOT in the
+    list are dropped. The arrow impl drops them INSIDE the Python
+    pass — the IVF probe filter fused into the assignment map (guide
+    §4: pass only the rows the consumer needs back across the Arrow
+    boundary; ~(1 - nprobe/num_cells) of the corpus never re-crosses
+    it); the expr impl filters the `topic` column, with the same
+    result."""
     if impl == "arrow":
         import numpy as np
         import pandas as pd
@@ -127,8 +128,10 @@ def _assign(vectors: DataFrame, centroids: list[list[float]], *,
         cos = F.array_max(sims) / vn
         best = F.when((vn > 0) & (cos >= F.lit(outlier_threshold)), best) \
                 .otherwise(F.lit(-1)).cast("int")
-    return vectors.select(F.col(id_col), F.col(vec_col),
-                          best.alias("topic"))
+    out = vectors.select(F.col(id_col), F.col(vec_col), best.alias("topic"))
+    if keep_topics is not None:
+        out = out.filter(F.col("topic").isin([int(t) for t in keep_topics]))
+    return out
 
 
 def _round_half_away(x: float, d: int) -> float:

@@ -14,6 +14,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory that holds this package: Python workers import the
+# engine's worker daemon (and the engine's UDF code) from it wherever
+# the driver was started.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # At 100 TB scale these would be set per-cluster; the values here are
 # ratios, not absolutes: shuffle partitions ~= 2-3x total cores, and
 # maxPartitionBytes kept at 128m so scan tasks stay memory-bounded.
@@ -36,6 +41,13 @@ _DEFAULT_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # Spark merges this with its own pyspark path and the launching
+    # environment's PYTHONPATH for every Python worker.
+    "spark.executorEnv.PYTHONPATH": _ENGINE_ROOT,
+    # Stock pyspark.daemon, but a zip archive on the workers' path is
+    # re-read at task start only when it changed (~0.2 s per task
+    # saved; see worker_daemon.py).
+    "spark.python.daemon.module": "parlerproject_spark.worker_daemon",
 }
 
 

@@ -148,6 +148,19 @@ def test_outlier_threshold_zero_share_on_tight_clusters(spark):
     assert out.filter(F.col("topic") == -1).count() == 0
 
 
+def test_keep_topics_filters_on_both_impls(spark):
+    vecs = _clustered_vectors(spark)
+    cents = topics.lloyd_centroids(vecs, k=2, max_iter=4)
+    full = {r["vec_id"]: r["topic"] for r in topics._assign(
+        vecs, cents, id_col="vec_id", vec_col="embedding").collect()}
+    kept = {i: t for i, t in full.items() if t == full[0]}
+    for impl in ("arrow", "expr"):
+        got = {r["vec_id"]: r["topic"] for r in topics._assign(
+            vecs, cents, id_col="vec_id", vec_col="embedding", impl=impl,
+            keep_topics=[full[0]]).collect()}
+        assert got == kept
+
+
 def test_fit_topics_outlier_share_reported(spark):
     # fit_topics' topic_info must carry the -1 row (the reference's
     # outlier-share report line, bertopicTest.py:107)
