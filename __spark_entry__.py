@@ -7,12 +7,13 @@ with its DuckDB oracle SQL; rows-only ops register oracle=None).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from parlerproject_spark import queries as _q  # noqa: E402
 

@@ -904,12 +904,17 @@ def embedding_near_dups(vectors: DataFrame, *, threshold: float,
                         mode: str = "exact", num_planes: int = 6,
                         num_tables: int = 8,
                         dim: int | None = None,
-                        cache_out: list | None = None,
-                        impl: str = "arrow") -> DataFrame:
+                        cache_out: list | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim).
 
-    mode='exact': all-pairs cosine via self-join — the correctness
-    oracle, O(n²) by definition; use only on bounded inputs.
+    mode='exact': all-pairs cosine — the correctness oracle, O(n²) by
+    definition; use only on bounded inputs. The partner side is
+    driver-collected (cap-enforced) and ships via sc.broadcast as a
+    numpy matrix; each row crosses the Python boundary once and the
+    vectorized HALF_UP scorer (`_bcast_cosine_scorer`) emits only
+    threshold hits. It replaced an interpreted per-pair fold (3× at a
+    125k-pair sample) and then a per-pair Arrow join (r13:
+    embedding_near_dup_pairs 6.2–6.8 s → 0.57–0.60 s warm at sf0.1).
     mode='lsh': random-hyperplane bucketing (same deterministic plane
     family as similarity.knn_lsh) — pairs only form inside a shared
     (table, signature) bucket, then exact cosine verifies. The 100 TB
@@ -924,47 +929,16 @@ def embedding_near_dups(vectors: DataFrame, *, threshold: float,
     unpersist it immediately instead of leaving the cache to the
     ContextCleaner.
     """
-    from parlerproject_spark.functions.vectors import dot as _dot
-    from parlerproject_spark.functions.vectors import l2_norm
-
-    a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    id_t = vectors.schema[id_col].dataType.simpleString()
     if mode == "exact":
-        # the all-pairs cosine is scored VECTORIZED (the same Arrow
-        # HALF_UP scorer the lsh mode verifies with — one numpy pass
-        # per batch instead of an interpreted 2·dim HOF fold per pair,
-        # the engine's documented hotspot shape; measured 3× at a
-        # 125k-pair sample). impl="expr" keeps the pure-JVM fold.
-        if impl == "arrow":
-            # r13: the partner side is driver-collected (exact mode's
-            # documented bounded-inputs contract, cap-enforced) and
-            # ships via sc.broadcast as a matrix — each vector crosses
-            # the Python boundary ONCE instead of once per pair; the
-            # |pairs|-row nested-loop join of 2·dim-wide rows
-            # disappears from the plan. Bit-identical scoring (see
-            # _bcast_cosine_scorer).
-            from parlerproject_spark.operators.layout import spread_input
-            ids_b, vecs_b = _collect_bounded_partners(
-                vectors, id_col, vec_col)
-            bc = _bcast_partner_matrix(vectors.sparkSession, ids_b, vecs_b)
-            id_t = vectors.schema[id_col].dataType.simpleString()
-            return spread_input(a).mapInPandas(
-                _bcast_cosine_scorer(bc, threshold, upper=True),
-                f"id_a {id_t}, id_b {id_t}, sim double")
-        # norms are per-ROW quantities — compute n once per vector
-        # before the join instead of twice per pair (the all-pairs
-        # join makes that a |pairs|/|rows| ≈ n/2 × saving); the
-        # arithmetic (sqrt(Σx²) per side, dot/(na·nb)) is identical,
-        # so the rounded values the oracle hashes are unchanged
-        an = a.withColumn("na", l2_norm("va"))
-        bn = b.withColumn("nb", l2_norm("vb"))
-        pairs = an.join(bn, F.col("id_a") < F.col("id_b"))
-        denom = F.col("na") * F.col("nb")
-        return (pairs.select(
-                    "id_a", "id_b",
-                    F.round(F.when(denom > 0, _dot("va", "vb") / denom), 6)
-                    .alias("sim"))
-                .filter(F.col("sim") >= threshold))
+        from parlerproject_spark.operators.layout import spread_input
+        ids_b, vecs_b = _collect_bounded_partners(vectors, id_col, vec_col)
+        bc = _bcast_partner_matrix(vectors.sparkSession, ids_b, vecs_b)
+        a = vectors.select(F.col(id_col).alias("id_a"),
+                           F.col(vec_col).alias("va"))
+        return spread_input(a).mapInPandas(
+            _bcast_cosine_scorer(bc, threshold, upper=True),
+            f"id_a {id_t}, id_b {id_t}, sim double")
     elif mode == "lsh":
         from parlerproject_spark.operators.similarity import _signatures_arrow
         if dim is None:
@@ -995,7 +969,6 @@ def embedding_near_dups(vectors: DataFrame, *, threshold: float,
         pairs = (sl.join(sr, ["tbl", "sig"])
                  .filter(F.col("id_a") < F.col("id_b"))
                  .select("id_a", "va", "id_b", "vb"))
-        id_t = vectors.schema[id_col].dataType.simpleString()
         return (pairs.mapInPandas(
                     _pair_cosine_scorer(threshold),
                     f"id_a {id_t}, id_b {id_t}, sim double")
@@ -1009,7 +982,6 @@ def semantic_dedup(vectors: DataFrame, *, threshold: float = 0.95,
                    vec_col: str = "embedding",
                    max_iter: int = 3,
                    round_c: int | None = None,
-                   impl: str = "hybrid",
                    block: int = 2048) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding-space semantic
     deduplication — k-means-cluster the vectors, form cosine >=
@@ -1024,34 +996,29 @@ def semantic_dedup(vectors: DataFrame, *, threshold: float = 0.95,
     assignment: bit-stable across environments); component formation
     reuses duplicate_clusters (pointer jumping, O(log d) rounds).
 
-    impl="hybrid" (default, the ORACLED path): the quadratic
-    within-cell work runs VECTORIZED (the arrow block-gram below) at
-    a LOOSENED threshold − 1e-6, then only the surviving candidate
-    pairs — near-dups, orders of magnitude fewer than all cell pairs
-    — are re-scored with the JVM expression fold whose formula AND
+    Pair scoring: the quadratic within-cell work runs VECTORIZED (a
+    per-cell block-wise gram matrix via applyInPandas) at a LOOSENED
+    threshold − 1e-6, then only the surviving candidate pairs —
+    near-dups, orders of magnitude fewer than all cell pairs — are
+    re-scored with the JVM expression fold whose formula AND
     sequential float64 summation order match the SQL oracle's
     sum(x*y)/(sqrt(sum(x²))·sqrt(sum(y²))). The final
     `sim >= threshold` decision is therefore hash-exact while the
     O(n²/k) dot products never touch an interpreted HOF: matmul vs
     sequential fold differ by ≲ d·ulp ≈ 1e-13 ≪ the 1e-6 margin, so
-    no true pair can be lost at the prefilter. (The pure-expr path
-    folded the dot per pair via F.aggregate — interpreted per
-    element, the engine's documented hotspot pattern — and was 8× the
-    cost at sf0.1.)
-    impl="expr": the all-pairs JVM fold (hash-exact but quadratic in
-    interpreted expression evaluations — the verification semantics,
-    kept for the equivalence pytest).
-    impl="arrow": per-cell BLOCK-WISE gram matrix via applyInPandas —
-    the dot is computed UN-normalized (X_blk @ Xᵀ, divided by the
-    norm outer product: same formula as the oracle, vectorized sum
-    order) in row blocks of `block`, so peak memory per group is
-    block × |cell| float64 (bounded) rather than |cell|² (a 100k-row
-    skewed cell would need ~80 GB dense). Pytest pins
-    expr/arrow/hybrid pair-set equivalence.
+    no true pair can be lost at the prefilter. The all-pairs fold it
+    replaced evaluated the dot per pair via F.aggregate and cost 8×
+    at sf0.1. The gram is computed UN-normalized (X_blk @ Xᵀ divided
+    by the norm outer product) in row blocks of `block`, so peak
+    memory per cell is block × |cell| float64 rather than |cell|² (a
+    100k-row skewed cell would need ~80 GB dense).
 
     Columns: <id_col>, cluster (k-means cell), keep (boolean —
     false = semantic duplicate of a kept earlier vector).
     """
+    import numpy as np
+    import pandas as pd
+
     from parlerproject_spark.functions.vectors import dot as _dot
     from parlerproject_spark.functions.vectors import l2_norm
     from parlerproject_spark.operators.topics import _assign, lloyd_centroids
@@ -1063,92 +1030,59 @@ def semantic_dedup(vectors: DataFrame, *, threshold: float = 0.95,
                         impl="expr")
                 .withColumnRenamed("topic", "cluster"))
 
-    def _arrow_pairs(thr: float) -> DataFrame:
-        import numpy as np
-        import pandas as pd
+    # Vectorized prefilter with a 1e-6 slack, then the hash-exact
+    # sequential fold on the (tiny) candidate set only. The two
+    # corpus-side joins stay un-exchanged when AQE broadcasts the
+    # candidate frame (near-dup pairs ≪ corpus by construction);
+    # with a dup-heavy corpus AQE falls back to a keyed join.
+    # The fold runs |candidates| times, not |cell|²/2.
+    thr = threshold - 1e-6
+    id_type = vectors.schema[id_col].dataType.simpleString()
 
-        id_type = vectors.schema[id_col].dataType.simpleString()
+    def cell_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        X = np.array(pdf["v"].tolist(), dtype=np.float64)
+        ids = pdf["vid"].to_numpy()
+        n = np.linalg.norm(X, axis=1)
+        ok = n > 0
+        X, ids, n = X[ok], ids[ok], n[ok]
+        m = len(ids)
+        empty = pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0]})
+        if m < 2:
+            return empty
+        order = np.argsort(ids)
+        X, ids, n = X[order], ids[order], n[order]
+        # Row-blocked gram: block × m scratch at a time, un-normalized
+        # dot then norm-product division (the oracle's formula), only
+        # threshold HITS retained — never the dense m × m matrix.
+        out = [empty]
+        for s in range(0, m, block):
+            e = min(s + block, m)
+            S = (X[s:e] @ X.T) / np.outer(n[s:e], n)
+            bi, bj = np.nonzero(S >= thr)
+            gi = bi + s
+            up = gi < bj           # strict upper triangle only
+            out.append(pd.DataFrame({"id_a": ids[gi[up]],
+                                     "id_b": ids[bj[up]]}))
+        return pd.concat(out, ignore_index=True)
 
-        def cell_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            X = np.array(pdf["v"].tolist(), dtype=np.float64)
-            ids = pdf["vid"].to_numpy()
-            n = np.linalg.norm(X, axis=1)
-            ok = n > 0
-            X, ids, n = X[ok], ids[ok], n[ok]
-            m = len(ids)
-            empty = pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0],
-                                  "sim": np.array([], dtype=np.float64)})
-            if m < 2:
-                return empty
-            order = np.argsort(ids)
-            X, ids, n = X[order], ids[order], n[order]
-            # Row-blocked gram: block × m scratch at a time,
-            # un-normalized dot then norm-product division (the
-            # oracle's formula), only threshold HITS retained — never
-            # the dense m × m matrix.
-            out = [empty]
-            for s in range(0, m, block):
-                e = min(s + block, m)
-                S = (X[s:e] @ X.T) / np.outer(n[s:e], n)
-                bi, bj = np.nonzero(S >= thr)
-                gi = bi + s
-                up = gi < bj           # strict upper triangle only
-                bi, gi, bj = bi[up], gi[up], bj[up]
-                out.append(pd.DataFrame({"id_a": ids[gi],
-                                         "id_b": ids[bj],
-                                         "sim": S[bi, bj]}))
-            return pd.concat(out, ignore_index=True)
-
-        return (assigned.select("cluster", F.col(id_col).alias("vid"),
-                                F.col(vec_col).alias("v"))
-                .groupBy("cluster")
-                .applyInPandas(cell_pairs,
-                               schema=f"id_a {id_type}, id_b {id_type}, "
-                                      "sim double"))
-
-    if impl == "expr":
-        sides = assigned.select("cluster", F.col(id_col).alias("vid"),
-                                F.col(vec_col).alias("v"),
-                                l2_norm(vec_col).alias("n"))
-        a = sides.alias("a")
-        # both sides are the same corpus-scale table: shuffle-hash on
-        # the cluster key, never a broadcast (same rationale as
-        # fingerprint_overlap_pairs)
-        b = sides.hint("shuffle_hash").alias("b")
-        sim = (_dot(F.col("a.v"), F.col("b.v"))
-               / (F.col("a.n") * F.col("b.n")))
-        pairs = (a.join(b, (F.col("a.cluster") == F.col("b.cluster"))
-                        & (F.col("a.vid") < F.col("b.vid")))
-                 .filter((F.col("a.n") > 0) & (F.col("b.n") > 0))
-                 .select(F.col("a.vid").alias("id_a"),
-                         F.col("b.vid").alias("id_b"), sim.alias("sim"))
-                 .filter(F.col("sim") >= threshold))
-    elif impl == "arrow":
-        pairs = _arrow_pairs(threshold)
-    elif impl == "hybrid":
-        # Vectorized prefilter with a 1e-6 slack, then the hash-exact
-        # sequential fold on the (tiny) candidate set only. The two
-        # corpus-side joins stay un-exchanged when AQE broadcasts the
-        # candidate frame (near-dup pairs ≪ corpus by construction);
-        # with a dup-heavy corpus AQE falls back to a keyed join —
-        # either way the fold now runs |candidates| times, not
-        # |cell|²/2 times.
-        cand = _arrow_pairs(threshold - 1e-6).select("id_a", "id_b")
-        sides = assigned.select(F.col(id_col).alias("vid"),
-                                F.col(vec_col).alias("v"),
-                                l2_norm(vec_col).alias("n"))
-        a = sides.select(F.col("vid").alias("id_a"),
-                         F.col("v").alias("va"), F.col("n").alias("na"))
-        b = sides.select(F.col("vid").alias("id_b"),
-                         F.col("v").alias("vb"), F.col("n").alias("nb"))
-        pairs = (cand.join(a, "id_a").join(b, "id_b")
-                 .filter((F.col("na") > 0) & (F.col("nb") > 0))
-                 .select("id_a", "id_b",
-                         (_dot("va", "vb")
-                          / (F.col("na") * F.col("nb"))).alias("sim"))
-                 .filter(F.col("sim") >= threshold))
-    else:
-        raise ValueError(f"unknown impl: {impl}")
+    cand = (assigned.select("cluster", F.col(id_col).alias("vid"),
+                            F.col(vec_col).alias("v"))
+            .groupBy("cluster")
+            .applyInPandas(cell_pairs,
+                           schema=f"id_a {id_type}, id_b {id_type}"))
+    sides = assigned.select(F.col(id_col).alias("vid"),
+                            F.col(vec_col).alias("v"),
+                            l2_norm(vec_col).alias("n"))
+    a = sides.select(F.col("vid").alias("id_a"),
+                     F.col("v").alias("va"), F.col("n").alias("na"))
+    b = sides.select(F.col("vid").alias("id_b"),
+                     F.col("v").alias("vb"), F.col("n").alias("nb"))
+    pairs = (cand.join(a, "id_a").join(b, "id_b")
+             .filter((F.col("na") > 0) & (F.col("nb") > 0))
+             .select("id_a", "id_b",
+                     (_dot("va", "vb")
+                      / (F.col("na") * F.col("nb"))).alias("sim"))
+             .filter(F.col("sim") >= threshold))
     comps = duplicate_clusters(pairs)  # (doc_id, cluster_id=min label)
     dupes = (comps.filter(F.col("doc_id") != F.col("cluster_id"))
              .select(F.col("doc_id").alias("dup_id")))

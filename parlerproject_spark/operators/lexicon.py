@@ -29,6 +29,9 @@ Two physical paths:
   (equivalence pytest). Python-speed per character; at real scale
   swap the inner loop for a compiled automaton behind the same
   seam.
+
+Both paths stay: the registered queries `dictionary_tag_docs` and
+`dictionary_tag_arrow_docs` each select one.
 """
 
 from __future__ import annotations

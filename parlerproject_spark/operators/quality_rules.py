@@ -154,8 +154,7 @@ def gopher_repetition_flags(docs: DataFrame, *, id_col: str = "doc_id",
                             max_dup_para_char_frac: float = 0.20,
                             max_top2_char_frac: float = 0.20,
                             max_top3_char_frac: float = 0.18,
-                            max_top4_char_frac: float = 0.16,
-                            impl: str = "arrow") -> DataFrame:
+                            max_top4_char_frac: float = 0.16) -> DataFrame:
     """The Gopher REPETITION filters (Rae et al. 2021 §A1, the
     companion of gopher_quality_flags' §A1.1 rules; the same signal
     set Dolma/RedPajama/FineWeb ship): documents dominated by
@@ -173,145 +172,24 @@ def gopher_repetition_flags(docs: DataFrame, *, id_col: str = "doc_id",
       / total word chars. Ties break to the lexicographically
       smallest gram (deterministic, oracle-replayable).
 
-    Plan shape: the line/paragraph signals are ZERO-shuffle array
-    algebra (each doc's lines live in its own row). The top-n-gram
-    signals need a per-(doc, gram) count — one explode (all three n
-    in one pass, ~3 rows per token) + one keyed aggregation + one
-    window over (doc, n), all partitioned by doc_id, then a
-    conditional-aggregation pivot back to one row per doc; per-doc
-    data is bounded by document length, so there is no skew a
-    single hot KEY could create — the unit of work is the document.
-    Columns: <id_col>, dup_line_frac, dup_para_frac,
-    dup_line_char_frac, dup_para_char_frac, top2gram_char_frac,
-    top3gram_char_frac, top4gram_char_frac, pass_* per signal, keep.
-    """
-    if impl == "arrow":
-        return _gopher_repetition_arrow(
-            docs, id_col=id_col, text_col=text_col,
-            thresholds=(max_dup_line_frac, max_dup_para_frac,
-                        max_dup_line_char_frac, max_dup_para_char_frac,
-                        max_top2_char_frac, max_top3_char_frac,
-                        max_top4_char_frac))
-
-    from pyspark.sql import Window
-
-    from parlerproject_spark.functions.text import tokenize
-
-    # the trim lambda must be wrapped: transform() sees that bare
-    # F.trim accepts a second argument and calls it as (element,
-    # INDEX) — the index becomes trim's character-set parameter and
-    # nothing is space-trimmed (latent divergence vs the oracle's
-    # trim(), caught by the arrow==expr equivalence test)
-    lines = F.filter(
-        F.transform(F.split(F.col(text_col), r"\n"),
-                    lambda l: F.trim(l)),
-        lambda l: F.length(l) > 0)
-    paras = F.filter(
-        F.transform(F.split(F.col(text_col), r"\n{2,}"),
-                    lambda p: F.trim(p)),
-        lambda p: F.length(p) > 0)
-
-    def dup_frac(arr):
-        total = F.size(arr)
-        return F.round(
-            (total - F.size(F.array_distinct(arr))).cast("double")
-            / F.greatest(total, F.lit(1)), 6)
-
-    def dup_char_frac(arr):
-        chars = lambda a: F.aggregate(  # noqa: E731
-            a, F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x))
-        total = chars(arr)
-        return F.round(
-            (total - chars(F.array_distinct(arr))).cast("double")
-            / F.greatest(total, F.lit(1)), 6)
-
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokenize(text_col).alias("ts"),
-        dup_frac(lines).alias("dup_line_frac"),
-        dup_frac(paras).alias("dup_para_frac"),
-        dup_char_frac(lines).alias("dup_line_char_frac"),
-        dup_char_frac(paras).alias("dup_para_char_frac"))
-
-    # one exploded stream for n in {2,3,4}: struct(n, gram) per
-    # position; gram char length = length - (n-1) separators
-    def grams(n):
-        return F.expr(
-            f"transform(slice(ts, 1, greatest(size(ts) - {n - 1}, 0)), "
-            f"(w, i) -> struct({n} AS n, "
-            f"array_join(slice(ts, i + 1, {n}), ' ') AS gram))")
-
-    word_chars = F.aggregate("ts", F.lit(0).cast("bigint"),
-                             lambda acc, w: acc + F.length(w))
-    exploded = (base
-                .select("doc_id", word_chars.alias("wc"),
-                        F.explode(F.concat(grams(2), grams(3), grams(4)))
-                        .alias("g"))
-                .select("doc_id", "wc", "g.n", "g.gram"))
-    counts = (exploded.groupBy("doc_id", "wc", "n", "gram")
-              .agg(F.count("*").alias("cnt")))
-    w = Window.partitionBy("doc_id", "n").orderBy(
-        F.col("cnt").desc(), F.col("gram").asc())
-    top = (counts.withColumn("rn", F.row_number().over(w))
-           .filter(F.col("rn") == 1)
-           .withColumn("frac", F.round(
-               (F.col("cnt") * (F.length("gram") - F.col("n") + 1))
-               .cast("double") / F.greatest(F.col("wc"), F.lit(1)), 6)))
-    pivot = (top.groupBy("doc_id").agg(*[
-        F.max(F.when(F.col("n") == n, F.col("frac")))
-        .alias(f"top{n}gram_char_frac") for n in (2, 3, 4)]))
-
-    out = (base.drop("ts")
-           .join(pivot, "doc_id", "left")
-           .select("doc_id", "dup_line_frac", "dup_para_frac",
-                   "dup_line_char_frac", "dup_para_char_frac",
-                   *[F.coalesce(f"top{n}gram_char_frac", F.lit(0.0))
-                     .alias(f"top{n}gram_char_frac") for n in (2, 3, 4)]))
-    flags = (out
-             .withColumn("pass_dup_line",
-                         F.col("dup_line_frac") <= max_dup_line_frac)
-             .withColumn("pass_dup_para",
-                         F.col("dup_para_frac") <= max_dup_para_frac)
-             .withColumn("pass_dup_line_chars",
-                         F.col("dup_line_char_frac")
-                         <= max_dup_line_char_frac)
-             .withColumn("pass_dup_para_chars",
-                         F.col("dup_para_char_frac")
-                         <= max_dup_para_char_frac)
-             .withColumn("pass_top2", F.col("top2gram_char_frac")
-                         <= max_top2_char_frac)
-             .withColumn("pass_top3", F.col("top3gram_char_frac")
-                         <= max_top3_char_frac)
-             .withColumn("pass_top4", F.col("top4gram_char_frac")
-                         <= max_top4_char_frac))
-    keep = (F.col("pass_dup_line") & F.col("pass_dup_para")
-            & F.col("pass_dup_line_chars") & F.col("pass_dup_para_chars")
-            & F.col("pass_top2") & F.col("pass_top3") & F.col("pass_top4"))
-    return (flags.withColumn("keep", keep)
-            .withColumnRenamed("doc_id", id_col))
-
-
-def _gopher_repetition_arrow(docs: DataFrame, *, id_col: str,
-                             text_col: str,
-                             thresholds: tuple) -> DataFrame:
-    """Arrow per-document implementation of the repetition signals —
-    result-identical to the expression form (same winnowing-style
-    impl split as text_analysis.winnow_fingerprints).
-
-    Why it exists: every signal is a function of ONE document, yet
-    the relational form pays (a) interpreted higher-order-function
-    lambdas per token to build three word-n-gram streams and (b) a
-    corpus-wide (doc, gram) exchange + window just to find each
-    doc's hottest gram. Here the whole computation is a ZERO-shuffle
-    mapInPandas: C-speed Counter over n-gram tuples per doc (tuple
-    order equals joined-string order because ' ' sorts below every
-    [a-z0-9] token char, so the lexicographic tie-break is
-    preserved). Measured ~6x faster at sf0.1.
+    Plan shape: every signal is a function of ONE document, so the
+    whole computation is a ZERO-shuffle mapInPandas: C-speed Counter
+    over n-gram tuples per doc (tuple order equals joined-string
+    order because ' ' sorts below every [a-z0-9] token char, so the
+    lexicographic tie-break is preserved). It replaced a relational
+    form that paid interpreted higher-order-function lambdas per
+    token for three word-n-gram streams plus a corpus-wide (doc,
+    gram) exchange and window just to find each doc's hottest gram;
+    this path measured ~6× faster at sf0.1.
 
     Rounding matches the JVM exactly: Decimal(float) quantized
     HALF_UP is BigDecimal(double).setScale(6, HALF_UP) — Python's
     built-in round() (banker's) would diverge on half-interval
-    values.
+    values. Lines and paragraphs strip SPACES only, like F.trim and
+    DuckDB trim.
+    Columns: <id_col>, dup_line_frac, dup_para_frac,
+    dup_line_char_frac, dup_para_char_frac, top2gram_char_frac,
+    top3gram_char_frac, top4gram_char_frac, pass_* per signal, keep.
     """
     import re
     from collections import Counter
@@ -320,7 +198,6 @@ def _gopher_repetition_arrow(docs: DataFrame, *, id_col: str,
 
     import pandas as pd
 
-    (t_dl, t_dp, t_dlc, t_dpc, t2, t3, t4) = thresholds
     tok = re.compile(r"[a-z0-9]+")
     para_split = re.compile(r"\n{2,}")
     id_type = docs.schema[id_col].dataType.simpleString()
@@ -372,10 +249,13 @@ def _gopher_repetition_arrow(docs: DataFrame, *, id_col: str,
                          dup_para_frac=dup_frac(paras),
                          dup_line_char_frac=dup_char_frac(lines),
                          dup_para_char_frac=dup_char_frac(paras))
-                p2, p3, p4 = fr[2] <= t2, fr[3] <= t3, fr[4] <= t4
-                pl, pp = d["dup_line_frac"] <= t_dl, d["dup_para_frac"] <= t_dp
-                plc = d["dup_line_char_frac"] <= t_dlc
-                ppc = d["dup_para_char_frac"] <= t_dpc
+                p2 = fr[2] <= max_top2_char_frac
+                p3 = fr[3] <= max_top3_char_frac
+                p4 = fr[4] <= max_top4_char_frac
+                pl = d["dup_line_frac"] <= max_dup_line_frac
+                pp = d["dup_para_frac"] <= max_dup_para_frac
+                plc = d["dup_line_char_frac"] <= max_dup_line_char_frac
+                ppc = d["dup_para_char_frac"] <= max_dup_para_char_frac
                 rows.append((did, d["dup_line_frac"], d["dup_para_frac"],
                              d["dup_line_char_frac"], d["dup_para_char_frac"],
                              fr[2], fr[3], fr[4],

@@ -413,11 +413,14 @@ def hashed_embedding(docs: DataFrame, *, dim: int = 16,
     model embedding exists.
 
     Plan: a pure narrow map (zero shuffle) — tokenize, bucket each
-    token, then one `transform` over 0..dim-1 counting bucket hits;
-    O(tokens · dim) work per row via JVM HOFs, the right trade at
-    small dim. For dim beyond ~64, prefer the explode →
-    (id, bucket) groupBy shape (one corpus exchange, O(tokens)).
-    Columns: <id_col>, embedding (array<double>, length dim).
+    token, then one `aggregate` fold adding each token's hit into a
+    dim-length zero vector; O(tokens · dim) work per row via JVM
+    HOFs, the right trade at small dim. For dim beyond ~64, prefer
+    the explode → (id, bucket) groupBy shape (one corpus exchange,
+    O(tokens)).
+    Columns: <id_col>, embedding (array<double>, length dim). NULL
+    text gives a NULL embedding (the row is kept); empty text gives
+    the zero vector.
     """
     if dim < 1:
         raise ValueError("dim must be >= 1")

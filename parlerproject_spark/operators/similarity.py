@@ -133,43 +133,14 @@ def knn_bruteforce(vectors: DataFrame, query: DataFrame, *, k: int = 10,
     return scored.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def plane_table(spark, *, dim: int, num_planes: int, num_tables: int) -> DataFrame:
-    """The hyperplane dimension table: one row per hash table,
-    (tbl, ws: array<array<double>>) with ws ordered by plane index.
-    num_tables rows — broadcast everywhere it is used."""
-    rows = [
-        (t, [[_plane_weight(t, p, d) for d in range(dim)] for p in range(num_planes)])
-        for t in range(num_tables)
-    ]
-    return spark.createDataFrame(rows, "tbl int, ws array<array<double>>")
-
-
-def _signatures(df: DataFrame, planes: DataFrame, *, vec_col: str,
-                key_cols: list[str]) -> DataFrame:
-    """Bit signature per (row, table): sign of <vec, plane> folded
-    into a bigint (first plane = MSB). One broadcast-nested-loop
-    against the tiny per-table plane rows and a pure-map fold — no
-    shuffle at all on the corpus side."""
-    def dotp(w):
-        return F.aggregate(
-            F.zip_with(F.col(vec_col), w, lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    sig = F.aggregate(
-        F.col("ws"), F.lit(0).cast("bigint"),
-        lambda acc, w: acc * 2 + F.when(dotp(w) >= 0, 1).otherwise(0))
-    return (df.crossJoin(F.broadcast(planes))
-            .select(*key_cols, vec_col, "tbl", sig.alias("sig")))
-
-
 def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
                       dim: int, num_planes: int, num_tables: int) -> DataFrame:
-    """Arrow fast path for `_signatures`: the (N×dim)·(dim×T·P) dot
-    products run as ONE numpy matmul per batch (BLAS) instead of
-    T·P·dim interpreted lambda steps per row. Same plane family,
-    same MSB-first bit fold; still a pure map — zero shuffle. Use
-    symmetrically (corpus AND query) so float summation order can
-    never put identical vectors in different buckets."""
+    """Hyperplane-LSH bit signature per (row, table): sign of
+    <vec, plane> folded MSB-first into a bigint. The (N×dim)·(dim×T·P)
+    dot products run as ONE numpy matmul per batch (BLAS); a pure map,
+    zero shuffle. Use symmetrically (corpus AND query) so float
+    summation order can never put identical vectors in different
+    buckets."""
     import numpy as np
     import pandas as pd
 
@@ -199,7 +170,7 @@ def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
 
 
 def knn_lsh(vectors: DataFrame, query: DataFrame, *, dim: int, k: int = 10,
-            num_planes: int = 6, num_tables: int = 8, impl: str = "arrow",
+            num_planes: int = 6, num_tables: int = 8,
             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """ANN cosine top-k: random-hyperplane LSH with multi-probe.
 
@@ -208,45 +179,26 @@ def knn_lsh(vectors: DataFrame, query: DataFrame, *, dim: int, k: int = 10,
     this instead of recomputing per query: `build_lsh_index` writes
     it partitionBy(tbl, sig) and `probe_lsh_index` prunes to the
     probed buckets at planning time.
-    Signatures default to the Arrow/BLAS path (`_signatures_arrow`);
-    impl="expr" keeps the pure-JVM expression form. Adjudicated r4
-    (tools/bench_ann_impl.py, noop-forced evaluation, warm workers):
-    arrow wins at EVERY size tested — 2k rows 2.2s vs 2.6s, 20k 3.9
-    vs 13.6, 200k 24.3 vs 138.7 (dim=64, 48 planes) — because the
-    HOF lambda path is interpreted per element while the matmul is
-    BLAS. The r3 bench regression attributed to this switch did not
-    reproduce; default stays "arrow" unconditionally.
+    Signatures run on the Arrow/BLAS path (`_signatures_arrow`). It
+    replaced a per-element higher-order-function fold, which it beat
+    at every size measured in r4 (noop-forced evaluation, warm
+    workers, dim=64, 48 planes): 2k rows 2.2 s vs 2.6 s, 20k 3.9 vs
+    13.6, 200k 24.3 vs 138.7.
     Query side: exact signature plus every hamming-1 neighbor
     (num_planes probes/table) — a few dozen broadcast rows. Exact
     cosine re-rank inside probed buckets only. Recall < 1 by design;
     `knn_bruteforce` is the oracle. Columns: vec_id, sim.
     """
-    spark = vectors.sparkSession
-    if impl == "arrow":
-        corpus = _signatures_arrow(
-            vectors, vec_col=vec_col, key_cols=[id_col], dim=dim,
-            num_planes=num_planes, num_tables=num_tables) \
-            .select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
-        qsig = _signatures_arrow(
-            query.select(F.col("q")), vec_col="q", key_cols=[], dim=dim,
-            num_planes=num_planes, num_tables=num_tables)
-        return _lsh_probe_rank(corpus, qsig, vec_col=vec_col, k=k,
-                               num_planes=num_planes)
-    planes = plane_table(spark, dim=dim, num_planes=num_planes, num_tables=num_tables)
-
-    corpus = _signatures(vectors, planes, vec_col=vec_col, key_cols=[id_col]) \
+    corpus = _signatures_arrow(
+        vectors, vec_col=vec_col, key_cols=[id_col], dim=dim,
+        num_planes=num_planes, num_tables=num_tables) \
         .select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
-
-    qsig = _signatures(query.select(F.col("q")), planes, vec_col="q", key_cols=[])
-    return _lsh_probe_rank(corpus, qsig, vec_col=vec_col, k=k,
-                           num_planes=num_planes)
-
-
-def _lsh_probe_rank(corpus: DataFrame, qsig: DataFrame, *, vec_col: str,
-                    k: int, num_planes: int) -> DataFrame:
-    """Shared LSH tail: multi-probe (exact bucket + every hamming-1
-    bucket), broadcast the few dozen probe rows into the corpus
-    signature table, exact cosine re-rank inside probed buckets."""
+    qsig = _signatures_arrow(
+        query.select(F.col("q")), vec_col="q", key_cols=[], dim=dim,
+        num_planes=num_planes, num_tables=num_tables)
+    # multi-probe (exact bucket + every hamming-1 bucket): broadcast
+    # the few dozen probe rows into the corpus signature table, exact
+    # cosine re-rank inside probed buckets
     probes = qsig.selectExpr(
         "q", "tbl",
         f"explode(concat(array(sig), transform(sequence(0, {num_planes - 1}), "
@@ -897,7 +849,6 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
                        mode: str = "exact", dim: int | None = None,
                        num_planes: int = 4, num_tables: int = 8,
                        id_col: str = "vec_id", vec_col: str = "embedding",
-                       impl: str = "arrow",
                        cache_out: list | None = None) -> DataFrame:
     """Margin-based parallel-pair mining (Artetxe & Schwenk 2019,
     the CCMatrix/LASER bitext-mining criterion): score every
@@ -918,6 +869,12 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
     family as knn_lsh) and fwd/bwd means run over the CANDIDATE
     sims — the 100 TB shape: cost follows neighborhood density,
     recall < 1 by design (pytest measures it against exact).
+    Both modes score on one path: the numpy Arrow scorers shared with
+    dedup (tgt matrix broadcast in exact mode, candidate pairs in lsh
+    mode). The exact scorer ships each src row across the Python
+    boundary once instead of once per pair (~40× fewer bytes at
+    sf0.1); its wall time here was within noise of the join form in
+    r13, while the same scorer cut embedding_near_dup_pairs ~11×.
 
     Determinism contract: sims are HALF_UP-rounded at 6 dp before
     the top-k means (rn tie-break: sim desc, partner id asc), the
@@ -934,7 +891,6 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
     a = src.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = tgt.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     id_t = src.schema[id_col].dataType.simpleString()
-    pairs = None
     if mode == "exact":
         # r13/r14: the tgt side is driver-collected (exact mode's
         # bounded-sides contract, cap-enforced — it was already
@@ -945,18 +901,15 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
         # of Arrow traffic at sf0.1's 2 500×2 500 halves) disappears.
         # Scoring is bit-identical (_bcast_cosine_scorer); spread FIRST
         # so the per-src-row cross scoring parallelizes beyond the
-        # scan's few input splits. impl="expr" keeps the join form.
-        if impl == "arrow":
-            from parlerproject_spark.operators.dedup import (
-                _bcast_cosine_scorer, _bcast_partner_matrix,
-                _collect_bounded_partners)
-            ids_b, vecs_b = _collect_bounded_partners(b, "id_b", "vb")
-            bc = _bcast_partner_matrix(tgt.sparkSession, ids_b, vecs_b)
-            sims = spread_input(a).mapInPandas(
-                _bcast_cosine_scorer(bc, -2.0, upper=False),
-                schema=f"id_a {id_t}, id_b {id_t}, sim double")
-        else:
-            pairs = spread_input(a).join(F.broadcast(b))
+        # scan's few input splits.
+        from parlerproject_spark.operators.dedup import (
+            _bcast_cosine_scorer, _bcast_partner_matrix,
+            _collect_bounded_partners)
+        ids_b, vecs_b = _collect_bounded_partners(b, "id_b", "vb")
+        bc = _bcast_partner_matrix(tgt.sparkSession, ids_b, vecs_b)
+        sims = spread_input(a).mapInPandas(
+            _bcast_cosine_scorer(bc, -2.0, upper=False),
+            schema=f"id_a {id_t}, id_b {id_t}, sim double")
     elif mode == "lsh":
         if dim is None:
             raise ValueError("lsh mode requires dim=")
@@ -978,18 +931,12 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
         cand = (sig_a.select("id_a", "tbl", "sig")
                 .join(sig_b.select("id_b", "tbl", "sig"), ["tbl", "sig"])
                 .select("id_a", "id_b").distinct())
-        pairs = (cand.join(a, "id_a").join(b, "id_b")
-                 .select("id_a", "va", "id_b", "vb"))
+        sims = (cand.join(a, "id_a").join(b, "id_b")
+                .select("id_a", "va", "id_b", "vb")
+                .mapInPandas(_pair_cosine_scorer(-2.0),
+                             schema=f"id_a {id_t}, id_b {id_t}, sim double"))
     else:
         raise ValueError(f"unknown mode {mode!r}")
-    if pairs is not None and impl == "arrow":
-        sims = pairs.select("id_a", "va", "id_b", "vb").mapInPandas(
-            _pair_cosine_scorer(-2.0),
-            schema=f"id_a {id_t}, id_b {id_t}, sim double")
-    elif pairs is not None:
-        sims = pairs.select(
-            "id_a", "id_b",
-            (F.round(cosine("va", "vb"), 6) + F.lit(0.0)).alias("sim"))
     # sims feeds THREE consumers (fwd means, bwd means, the margin
     # re-join) and Spark shares no subplans — without materialization
     # the |A|×|B| scoring pass runs three times (measured 6.1 s →

@@ -316,8 +316,7 @@ def _winnow_norm(text_col: str):
 
 
 def winnow_fingerprints(docs: DataFrame, *, k: int = 8, window: int = 4,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        impl: str = "arrow") -> DataFrame:
+                        id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03) — the rolling-hash fingerprinting op of the
     training-data pipeline surface.
@@ -328,70 +327,51 @@ def winnow_fingerprints(docs: DataFrame, *, k: int = 8, window: int = 4,
     fingerprint set. Guarantee: any shared substring of length
     >= k + window - 1 yields at least one shared fingerprint.
 
-    Plan shape: ZERO shuffles either way. A document's grams all
-    live in its own row, so the algorithm is a pure map — scan →
-    project → (per-doc fingerprinting) → explode, no exchange
-    anywhere, embarrassingly parallel at any scale.
+    Plan shape: ZERO shuffles. A document's grams all live in its
+    own row, so the algorithm is a pure map — scan → project →
+    (per-doc fingerprinting) → explode, no exchange anywhere,
+    embarrassingly parallel at any scale.
 
-    Two result-identical implementations of the per-doc step:
-    - impl="arrow" (default): mapInPandas + numpy — the hash is an
-      int64 convolution (max code 127 × 31^7 × 8 ≈ 2.3e17 < 2^63,
-      one mod at the end, congruent to the per-step-mod recurrence)
-      and the window-min a stride-trick sliding view. Measured 3.2×
-      faster than the expression form at sf0.1: per-character work
-      is exactly where interpreted higher-order-function lambdas
-      lose to vectorized Arrow batches.
-    - impl="expr": nested array expressions, 100% JVM-side — kept
-      for environments where Python workers are undesirable.
-    Both are hash-verified against the same DuckDB oracle.
-    Columns: doc_id, fp.
+    The per-doc step is mapInPandas + numpy: the hash is an int64
+    convolution (max code 127 × 31^7 × 8 ≈ 2.3e17 < 2^63, one mod at
+    the end, congruent to the per-step-mod recurrence) and the
+    window-min a stride-trick sliding view. It replaced a nested
+    array-expression form that it beat 3.2× at sf0.1: per-character
+    work is exactly where interpreted higher-order-function lambdas
+    lose to vectorized Arrow batches. Hash-verified against the
+    DuckDB oracle. Columns: doc_id, fp.
     """
+    import numpy as np
+    import pandas as pd
+
     base = docs.select(F.col(id_col).alias("doc_id"),
                        _winnow_norm(text_col).alias("t")) \
         .filter(F.length("t") >= k + window - 1)
+    id_type = base.schema["doc_id"].dataType.simpleString()
+    pw = [31 ** (k - 1 - j) for j in range(k)]
 
-    if impl == "arrow":
-        import numpy as np
-        import pandas as pd
+    def per_doc(it):
+        w_rev = np.array(pw[::-1], dtype=np.int64)
+        for pdf in it:
+            ids: list = []
+            fps: list = []
+            for doc_id, t in zip(pdf["doc_id"], pdf["t"]):
+                codes = np.frombuffer(t.encode("ascii"),
+                                      dtype=np.uint8).astype(np.int64)
+                if len(codes) - k + 1 < window:
+                    continue
+                h = np.convolve(codes, w_rev, mode="valid") % WINNOW_MOD
+                mins = np.lib.stride_tricks.sliding_window_view(
+                    h, window).min(axis=1)
+                u = np.unique(mins)
+                ids.extend([doc_id] * len(u))
+                fps.append(u)
+            yield pd.DataFrame({
+                "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
+                "fp": np.concatenate(fps) if fps
+                      else np.array([], dtype=np.int64)})
 
-        id_type = base.schema["doc_id"].dataType.simpleString()
-        pw = [31 ** (k - 1 - j) for j in range(k)]
-
-        def per_doc(it):
-            w_rev = np.array(pw[::-1], dtype=np.int64)
-            for pdf in it:
-                ids: list = []
-                fps: list = []
-                for doc_id, t in zip(pdf["doc_id"], pdf["t"]):
-                    codes = np.frombuffer(t.encode("ascii"),
-                                          dtype=np.uint8).astype(np.int64)
-                    if len(codes) - k + 1 < window:
-                        continue
-                    h = np.convolve(codes, w_rev, mode="valid") % WINNOW_MOD
-                    mins = np.lib.stride_tricks.sliding_window_view(
-                        h, window).min(axis=1)
-                    u = np.unique(mins)
-                    ids.extend([doc_id] * len(u))
-                    fps.append(u)
-                yield pd.DataFrame({
-                    "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                    "fp": np.concatenate(fps) if fps
-                          else np.array([], dtype=np.int64)})
-
-        return base.mapInPandas(per_doc, f"doc_id {id_type}, fp long")
-
-    codes = F.transform(F.split(F.col("t"), ""),
-                        lambda ch: F.ascii(ch).cast("bigint"))
-    with_codes = base.select("doc_id", codes.alias("codes"))
-    gram_hash = lambda pos: F.aggregate(  # noqa: E731
-        F.slice("codes", pos, F.lit(k)), F.lit(0).cast("bigint"),
-        lambda acc, x: (acc * F.lit(31) + x) % F.lit(WINNOW_MOD))
-    hashes = F.transform(F.sequence(F.lit(1), F.size("codes") - k + 1), gram_hash)
-    with_hashes = with_codes.select("doc_id", hashes.alias("hs"))
-    mins = F.transform(F.sequence(F.lit(1), F.size("hs") - window + 1),
-                       lambda i: F.array_min(F.slice("hs", i, F.lit(window))))
-    return with_hashes.select(
-        "doc_id", F.explode(F.array_distinct(mins)).alias("fp"))
+    return base.mapInPandas(per_doc, f"doc_id {id_type}, fp long")
 
 
 def fingerprint_overlap(docs: DataFrame, *, k: int = 8, window: int = 4,

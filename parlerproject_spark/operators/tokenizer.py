@@ -212,80 +212,58 @@ def train_bpe(docs: DataFrame, *, n_merges: int = 50,
 
 def apply_bpe(docs: DataFrame, merges: list[tuple[str, str]], *,
               id_col: str = "doc_id",
-              text_col: str = "text",
-              impl: str = "arrow") -> DataFrame:
+              text_col: str = "text") -> DataFrame:
     """Segment each document's tokens with a learned merge list —
     merges replay in training order over each word's symbols (the
     standard BPE encoder).
 
-    Scale shape: the merge fold is evaluated ONCE PER DISTINCT WORD
-    (the segmentation of a word doesn't depend on the document), so
-    the expensive nested-fold expression runs over the vocabulary
-    table — the same table training iterated — and documents get
-    their pieces back by a token-keyed join. Encoding cost is
-    vocab × merges + one keyed join, instead of corpus × merges:
-    the r4 bench cut bpe_segment_docs ~4× with this split. The
-    vocab side is a corpus-derived aggregate — sizes follow the
+    Scale shape: the merge replay runs ONCE PER DISTINCT WORD (the
+    segmentation of a word doesn't depend on the document), over the
+    vocabulary table — the same table training iterated — and
+    documents get their pieces back by a token-keyed join. Encoding
+    cost is vocab × merges + one keyed join, instead of corpus ×
+    merges: the r4 bench cut bpe_segment_docs ~4× with this split.
+    The vocab side is a corpus-derived aggregate — sizes follow the
     corpus, so the join stays a shuffle join (AQE may broadcast a
     small vocab at test scale; at 100 TB it must not, and nothing
     here forces it).
+    The replay is a left-to-right greedy pass per vocab batch in
+    Python (mapInPandas). It replaced n_merges NESTED interpreted
+    aggregate() expressions, which re-walked every word's symbol
+    array once per merge with O(len) array rebuilds — measured ~5×
+    slower at sf0.1 with 50 merges. The reference-BPE pytest pins
+    the output.
     Columns: <id_col>, n_words, n_pieces, pieces (array<string>,
     EOW markers stripped).
     """
+    from collections.abc import Iterator
+
+    import pandas as pd
+
     toked = docs.select(F.col(id_col).alias("doc_id"),
                         tokenize(text_col).alias("ws"))
     vocab_words = toked.select(F.explode("ws").alias("word")).distinct()
-    if impl == "arrow":
-        # Same left-to-right greedy replay, vectorized per vocab
-        # batch in Python instead of n_merges NESTED interpreted
-        # aggregate() expressions (the expr form re-walks every
-        # word's symbol array once per merge through an interpreted
-        # lambda with O(len) array rebuilds — measured ~5x slower at
-        # sf0.1 with 50 merges). Pure string algorithm, bit-identical
-        # output; the reference-BPE pytest pins both forms.
-        from collections.abc import Iterator
+    mlist = list(merges)
 
-        import pandas as pd
+    def seg(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        def one(word: str) -> list[str]:
+            syms = list(word) + [EOW]
+            for a, b in mlist:
+                out: list[str] = []
+                for s in syms:
+                    if out and out[-1] == a and s == b:
+                        out[-1] = a + b
+                    else:
+                        out.append(s)
+                syms = out
+            return syms
 
-        mlist = list(merges)
+        for pdf in it:
+            yield pd.DataFrame({"word": pdf["word"],
+                                "syms": [one(w) for w in pdf["word"]]})
 
-        def seg(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            def one(word: str) -> list[str]:
-                syms = list(word) + [EOW]
-                for a, b in mlist:
-                    out: list[str] = []
-                    for s in syms:
-                        if out and out[-1] == a and s == b:
-                            out[-1] = a + b
-                        else:
-                            out.append(s)
-                    syms = out
-                return syms
-
-            for pdf in it:
-                yield pd.DataFrame({"word": pdf["word"],
-                                    "syms": [one(w) for w in pdf["word"]]})
-
-        words = vocab_words.mapInPandas(
-            seg, schema="word string, syms array<string>")
-    else:
-        words = vocab_words.withColumn("syms", F.concat(
-            F.filter(F.split("word", ""),
-                     lambda c: F.length(c) > 0),
-            F.array(F.lit(EOW))))
-        for a, b in merges:
-            la, lb = F.lit(a), F.lit(b)
-            words = words.withColumn(
-                "syms",
-                F.aggregate(
-                    "syms",
-                    F.expr("cast(array() as array<string>)"),
-                    lambda acc, s: F.when(
-                        (F.size(acc) > 0)
-                        & (F.element_at(acc, -1) == la) & (s == lb),
-                        F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                                 F.array(F.concat(la, lb)))
-                    ).otherwise(F.concat(acc, F.array(s)))))
+    words = vocab_words.mapInPandas(
+        seg, schema="word string, syms array<string>")
     strip = F.transform("syms", lambda s: F.replace(s, F.lit(EOW),
                                                     F.lit("")))
     vocab = words.select(

@@ -68,7 +68,10 @@ def _assign(vectors: DataFrame, centroids: list[list[float]], *,
     environments; impl="expr" (single pre-normalized centroid
     literal, dot-product expression per cell, pure JVM) evaluates in
     a fixed order — use it where bit-for-bit cross-engine stability
-    outweighs throughput.
+    outweighs throughput. Both paths stay because real callers set
+    them differently: semantic_dedup needs the fixed-order fold for
+    hash-exact cells, while knn_ivf, the IVF/PQ indexes, density and
+    the topic queries take the arrow default.
 
     `outlier_threshold`: when set, a vector whose best cosine
     similarity falls below it gets topic -1 — the engine's analogue

@@ -420,37 +420,17 @@ def test_semantic_dedup_transitive_chain_keeps_one(spark):
     assert out == {10: True, 11: False, 12: False}
 
 
-def test_semantic_dedup_arrow_impl_matches_expr(spark, sf_dir):
-    """The block-wise Arrow gram path must produce the identical
-    (vec_id, cluster, keep) frame as the oracled JVM-expression join
-    path — block=7 forces multiple row blocks per cell so the
-    blocking logic itself is exercised (r5 advice: the dense
-    |cell|² matrix OOMs on skewed cells; the blocked form must stay
-    result-identical)."""
+def test_semantic_dedup_row_blocks_do_not_change_result(spark, sf_dir):
+    """block=7 splits every cell's gram matrix into many row blocks
+    (the bounded-memory form for skewed cells); the (vec_id, cluster,
+    keep) frame must equal the one-block run."""
     from parlerproject_spark.operators.dedup import semantic_dedup
     emb = load_table(spark, "embeddings", sf_dir).limit(120)
     kw = dict(threshold=0.9, k=4, round_c=6)
-    expr = sorted(map(tuple, semantic_dedup(emb, impl="expr",
-                                            **kw).collect()))
-    arrow = sorted(map(tuple, semantic_dedup(emb, impl="arrow", block=7,
-                                             **kw).collect()))
-    assert expr == arrow
-
-
-def test_semantic_dedup_hybrid_impl_matches_expr(spark, sf_dir):
-    """The default hybrid path (vectorized prefilter at threshold−1e-6
-    → exact JVM fold on survivors) must be result-identical to the
-    pure-expr verification semantics: matmul vs sequential-fold
-    rounding differs by ≲1e-13, far inside the prefilter margin, so
-    the exact fold alone decides every pair."""
-    from parlerproject_spark.operators.dedup import semantic_dedup
-    emb = load_table(spark, "embeddings", sf_dir).limit(120)
-    kw = dict(threshold=0.9, k=4, round_c=6)
-    expr = sorted(map(tuple, semantic_dedup(emb, impl="expr",
-                                            **kw).collect()))
-    hybrid = sorted(map(tuple, semantic_dedup(emb, impl="hybrid", block=7,
-                                              **kw).collect()))
-    assert expr == hybrid
+    whole = sorted(map(tuple, semantic_dedup(emb, **kw).collect()))
+    blocked = sorted(map(tuple, semantic_dedup(emb, block=7,
+                                               **kw).collect()))
+    assert whole == blocked and len(whole) == 120
 
 
 # Product quantization ------------------------------------------------------
@@ -519,20 +499,6 @@ def test_ivfpq_index_probe_prunes_and_recalls(spark, sf_dir, tmp_path):
     filt = re.findall(r"PartitionFilters: \[cell#\d+ IN \(([^)]*)\)\]",
                       plan)
     assert filt and all(len(f.split(",")) <= 3 for f in filt), plan
-
-
-def test_embedding_near_dups_exact_arrow_expr_parity(spark, sf_dir):
-    """Exact mode's Arrow scorer and pure-JVM fold agree pair-for-pair
-    including the rounded sim (the HALF_UP contract)."""
-    from parlerproject_spark.catalog import load_table
-    emb = load_table(spark, "embeddings", sf_dir)
-    a = {(r["id_a"], r["id_b"]): r["sim"]
-         for r in dedup.embedding_near_dups(
-             emb, threshold=0.3, mode="exact", impl="arrow").collect()}
-    e = {(r["id_a"], r["id_b"]): r["sim"]
-         for r in dedup.embedding_near_dups(
-             emb, threshold=0.3, mode="exact", impl="expr").collect()}
-    assert a == e
 
 
 def test_exact_mode_bounded_sides_cap(spark, sf_dir, monkeypatch):

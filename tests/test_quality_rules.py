@@ -166,25 +166,12 @@ def test_repetition_top_ngram_tie_breaks_lexicographically(spark):
     assert r1["top2gram_char_frac"] == r2["top2gram_char_frac"]
 
 
-def test_repetition_arrow_equals_expr(spark):
-    """The Arrow per-doc implementation is row-identical to the
-    expression form on adversarial fixtures: duplicate lines/paras,
-    tie-broken top grams, short docs, empty-after-trim lines."""
-    from parlerproject_spark.operators.quality_rules import (
-        gopher_repetition_flags)
-    docs = spark.createDataFrame(
-        [(1, "aa bb cc\naa bb cc\n\naa bb cc"),
-         (2, "x y x y x y x y"),
-         (3, "one"),                      # no 2-grams at all
-         (4, "  \n  \npad line  \npad line"),
-         (5, "aa dd bb cc"),              # top-gram tie
-         (6, "w1 w2 w3 " * 50 + "tail")],
-        "doc_id bigint, text string")
-    a = gopher_repetition_flags(docs, impl="arrow").orderBy("doc_id")
-    e = gopher_repetition_flags(docs, impl="expr").orderBy("doc_id")
-    assert [(f.name, f.dataType) for f in a.schema] == \
-           [(f.name, f.dataType) for f in e.schema]
-    assert a.collect() == e.collect()
+def test_repetition_lines_trim_spaces_and_drop_blanks(spark):
+    # space-only lines vanish and trailing spaces are trimmed (SQL
+    # trim semantics), so "pad line  " repeats "pad line": 1 dup of 2
+    r = _rep(spark, "  \n  \npad line  \npad line")
+    assert r["dup_line_frac"] == 0.5
+    assert r["dup_line_char_frac"] == 0.5
 
 
 class TestReadabilityScores:

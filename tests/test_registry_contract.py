@@ -73,12 +73,15 @@ def test_norm_frame_mirrors_driver_crash_on_array_cells():
     as the driver did on round-11 `hashed_bow_docs`. If this test
     starts passing silently, the local gate has drifted back to
     stringify-first and will mask the crash class."""
+    import os
     import sys
 
     import pandas as pd
     import pytest
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools"))
     from check_oracle import norm_frame, value_hash
 
     bad = pd.DataFrame({"id": [2, 1], "v": [[1.0, 2.0], [3.0]]})

@@ -558,6 +558,14 @@ def test_hashed_embedding_counts_and_determinism(spark):
         "Spark joins data. Spark queries data.", dim=8) == list(got[1])
 
 
+def test_hashed_embedding_null_text_gives_null_embedding(spark):
+    from parlerproject_spark.operators.retrieval import hashed_embedding
+
+    df = spark.createDataFrame([(1, None)], "doc_id long, text string")
+    [r] = hashed_embedding(df, dim=4).collect()
+    assert r["doc_id"] == 1 and r["embedding"] is None
+
+
 def test_rag_pipeline_end_to_end_contract(spark, sf_dir):
     import __spark_entry__ as m
     rows = m.queries()["rag_pipeline_docs"](spark, sf_dir).collect()

@@ -11,7 +11,7 @@ Usage: python tools/check_oracle.py [sf_dir] [name ...]
 query whose name starts with P (e.g. --prefix citation). `--jobs N`
 (VERDICT r12 item 8) splits the selected names round-robin across N
 subprocesses, each with its own Spark session on ~cores/N threads —
-the full 324-query replay drops from ~18 min single-process to the
+the full 328-query replay drops from ~18 min single-process to the
 slowest shard's wall clock. Workers stay single-process (`--jobs 1`
 implied), so per-query cache release and output formats are
 identical to a plain run.
@@ -20,13 +20,14 @@ identical to a plain run.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import traceback
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -93,7 +94,6 @@ def _run_sharded(sf_dir: str, names: list[str], jobs: int) -> int:
     """Round-robin the selected queries across `jobs` subprocess
     workers (own JVM each, ~cores/jobs threads) and aggregate their
     per-query lines + failure counts."""
-    import os
     import re
     import subprocess
 

@@ -7,9 +7,11 @@ Usage: python tools/plan_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from parlerproject_spark import queries as Q
 from parlerproject_spark.plans import inspect
@@ -260,7 +262,7 @@ def main() -> None:
         out.append(plan)
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({n_ok} ok / {len(names)} queries)")
 
